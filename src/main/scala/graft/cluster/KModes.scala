@@ -2,23 +2,29 @@ package graft.cluster
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.PatternTable
 
 /** KModes — categorical k-clustering with mode centroids and Hamming
   * dissimilarity (SURVEY.md M5; reference uses the `kmodes` library with Cao
   * init, clustering.py:349-363, 513-539). No MLlib equivalent — custom
-  * Lloyd-style iteration over DataFrames:
+  * Lloyd-style iteration:
   *
-  *  - init: Cao-style density init — per-value frequencies and the distinct
-  *    pattern table are computed distributed; the greedy centroid pick runs
-  *    on the collected top patterns (bounded, deterministic).
-  *  - assign: per-centroid Hamming distance as a codegen'd when-sum
-  *    expression; argmin via array_position (ties → lowest centroid index).
-  *  - update: per-(cluster, column) modes from one tall aggregation.
+  *  - init: Cao-style density init — the greedy centroid pick runs on the
+  *    top distinct patterns by count (bounded, deterministic).
+  *  - assign: Hamming distance to each centroid, argmin with ties to the
+  *    lowest centroid index.
+  *  - update: per-(cluster, column) modes.
   *
-  * Each iteration is one distributed aggregation over the assigned frame;
-  * centroids (k × |cols|) live on the driver. At 100 TB the per-iteration
-  * cost is a single map-side-combinable groupBy — the classic scalable
-  * KModes shape.
+  * Every stage reads a row only through its answer pattern, so the fit
+  * collects ONE `groupBy(cols).count()` pattern table through
+  * [[graft.PatternTable]]'s measured-size gate and runs init, every Lloyd
+  * pass and the cost on the driver over (pattern, count) — integer count
+  * arithmetic, so the result equals the distributed loop's exactly. Past
+  * the gate, each iteration is one distributed aggregation over the
+  * assigned input, cached for the fit and released before it returns (a
+  * map-side-combinable groupBy — the classic scalable KModes shape). On
+  * both paths the labeled frame is the lazy [[assign]] column expression
+  * over the uncached input, so a fit leaves no cache behind.
   */
 object KModes {
 
@@ -43,23 +49,30 @@ object KModes {
       .withColumn("__mind", array_min(col("__d")))
   }
 
+  /** The patterns Cao init picks from: the most frequent ones. */
+  private val TopPatterns = 256
+
   /** Cao-style deterministic init: density(pattern) = count · Σ_j freq_j(x_j);
-    * greedy pick maximizing density × min-distance-to-chosen. */
+    * greedy pick maximizing density × min-distance-to-chosen, over the top
+    * `topPatterns` patterns by (count desc, values asc). */
   private[cluster] def caoInit(df: DataFrame, cols: Seq[String], k: Int,
-      topPatterns: Int = 256): Array[Array[String]] = {
+      topPatterns: Int = TopPatterns): Array[Array[String]] = {
     val patterns = df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("__n"))
       .orderBy(col("__n").desc +: cols.map(col): _*)
       .limit(topPatterns).collect()
-    val rows = patterns.map(r => (cols.indices.map(i =>
-      Option(r.get(i)).map(_.toString).orNull).toArray, r.getLong(cols.size)))
+    caoPick(patterns.map(r => (cols.indices.map(i =>
+      Option(r.get(i)).map(_.toString).orNull).toArray, r.getLong(cols.size))), k)
+  }
+
+  /** [[caoInit]]'s greedy pick over its top patterns, in their order. */
+  private def caoPick(rows: Array[(Array[String], Long)], k: Int)
+      : Array[Array[String]] = {
     val n = rows.map(_._2).sum.toDouble
     val freq: Map[(Int, String), Double] = rows.flatMap { case (vals, cnt) =>
       vals.zipWithIndex.map { case (v, i) => (i, v) -> cnt.toDouble }
     }.groupBy(_._1).view.mapValues(_.map(_._2).sum / n).toMap
     def density(vals: Array[String], cnt: Long): Double =
       cnt * vals.zipWithIndex.map { case (v, i) => freq.getOrElse((i, v), 0.0) }.sum
-    def dist(a: Array[String], b: Array[String]): Int =
-      a.zip(b).count { case (x, y) => x != y }
     val chosen = scala.collection.mutable.ArrayBuffer[Array[String]]()
     val first = rows.maxBy { case (v, c) => (density(v, c), v.mkString("\u0000")) }
     chosen += first._1
@@ -73,48 +86,100 @@ object KModes {
     chosen.toArray
   }
 
-  /** Per-(cluster, column) modes in ONE tall aggregation (ties → smallest
-    * value, deterministic). */
-  private def newCentroids(assigned: DataFrame, cols: Seq[String], k: Int,
-      previous: Array[Array[String]]): Array[Array[String]] = {
-    val tall = assigned
-      .select(col("cluster") +: cols.map(c => col(c).cast("string").as(c)): _*)
-      .unpivot(Array(col("cluster")), cols.map(col).toArray, "var", "value")
-      .groupBy("cluster", "var", "value").agg(count(lit(1)).as("n"))
-      .collect()
-    val byClusterVar = tall.groupBy(r => (r.getInt(0), r.getString(1)))
-    Array.tabulate(k) { c =>
-      cols.zipWithIndex.map { case (v, j) =>
-        byClusterVar.get((c, v)) match {
-          case Some(rs) => rs.maxBy(r => (r.getLong(3), {
-            // tie-break: lexicographically smallest value wins (negated sort
-            // not possible on strings — invert via ordering on tuple)
-            r.getString(2)
-          }))(Ordering.Tuple2(Ordering.Long, Ordering.String.reverse)).getString(2)
-          case None => previous(c)(j) // empty cluster keeps its centroid
-        }
-      }.toArray
-    }
-  }
+  /** Hamming distance of two patterns (null-safe, like [[assign]]'s `<=>`). */
+  private def dist(a: Array[String], b: Array[String]): Int =
+    a.zip(b).count { case (x, y) => x != y }
 
-  /** Full fit. Deterministic given data + parameters (no RNG anywhere). */
-  def fit(df: DataFrame, cols: Seq[String], k: Int, maxIter: Int = 10)
-      : (KModesModel, DataFrame) = {
-    val data = df.select(cols.map(c => col(c).cast("string").as(c)) ++
-      df.columns.filterNot(cols.contains).map(col): _*).cache()
-    var centroids = caoInit(data, cols, k)
+  /** Per-(cluster, column) modes from (cluster, column index) → value
+    * counts (ties → smallest value, deterministic); an empty cluster keeps
+    * its previous centroid. */
+  private def modes(counts: collection.Map[(Int, Int), Iterable[(String, Long)]],
+      previous: Array[Array[String]]): Array[Array[String]] =
+    Array.tabulate(previous.length) { c =>
+      Array.tabulate(previous(c).length) { j =>
+        counts.get((c, j)).map(PatternTable.mode(_)._1).getOrElse(previous(c)(j))
+      }
+    }
+
+  /** Lloyd passes until the centroids stop changing or `maxIter`. */
+  private def lloyd(init: Array[Array[String]], maxIter: Int)(
+      update: Array[Array[String]] => Array[Array[String]])
+      : (Array[Array[String]], Int) = {
+    var centroids = init
     var iter = 0
     var changed = true
     while (iter < maxIter && changed) {
-      val assigned = assign(data, cols, centroids)
-      val next = newCentroids(assigned, cols, k, centroids)
+      val next = update(centroids)
       changed = !next.zip(centroids).forall { case (a, b) => a.sameElements(b) }
       centroids = next
       iter += 1
     }
-    val finalAssigned = assign(data, cols, centroids)
-    val cost = finalAssigned.agg(sum("__mind")).head().getLong(0).toDouble
-    (KModesModel(cols, centroids, cost, iter),
-      finalAssigned.drop("__d", "__mind"))
+    (centroids, iter)
+  }
+
+  /** Full fit. Deterministic given data + parameters (no RNG anywhere). */
+  def fit(df: DataFrame, cols: Seq[String], k: Int, maxIter: Int = 10)
+      : (KModesModel, DataFrame) =
+    fitGated(df, cols, k, maxIter, PatternTable.DefaultMaxPatterns)
+
+  /** [[fit]] with an explicit pattern-table gate (specs force it shut to
+    * pin the fast path against the distributed loop). */
+  private[graft] def fitGated(df: DataFrame, cols: Seq[String], k: Int,
+      maxIter: Int, maxPatterns: Int): (KModesModel, DataFrame) = {
+    val data = df.select(cols.map(c => col(c).cast("string").as(c)) ++
+      df.columns.filterNot(cols.contains).map(col): _*)
+    val model = PatternTable.collect(data, cols, maxPatterns) match {
+      case Some(t) => fitPatterns(t, cols, k, maxIter)
+      case None =>
+        val cached = data.cache()
+        try fitDistributed(cached, cols, k, maxIter)
+        finally cached.unpersist(blocking = false)
+    }
+    (model, assign(data, cols, model.centroids).drop("__d", "__mind"))
+  }
+
+  /** The fit over a pattern table: every stage of [[fitDistributed]], with
+    * the pattern counts as row weights. */
+  private def fitPatterns(t: PatternTable, cols: Seq[String], k: Int,
+      maxIter: Int): KModesModel = {
+    val top = t.patterns.zip(t.counts).sortBy { case (p, n) =>
+      (n, p.toSeq.map(Option(_))) }(Ordering.Tuple2(Ordering.Long.reverse,
+        Ordering.Implicits.seqOrdering[Seq, Option[String]](
+          Ordering.Option(graft.Utf8Order)))).take(TopPatterns)
+    // (nearest centroid, its distance) per pattern; ties → lowest index
+    def nearest(cs: Array[Array[String]]): Array[(Int, Int)] =
+      t.patterns.map { p =>
+        val d = cs.map(dist(_, p))
+        val m = d.min
+        (d.indexOf(m), m)
+      }
+    val (centroids, iter) = lloyd(caoPick(top, k), maxIter) { cs =>
+      val near = nearest(cs)
+      // ((cluster, column), value) → rows, then per (cluster, column)
+      modes(t.patterns.indices.flatMap(i => cols.indices.map(j =>
+          ((near(i)._1, j), t.patterns(i)(j)) -> t.counts(i)))
+        .groupMapReduce(_._1)(_._2)(_ + _)
+        .groupMap(_._1._1) { case ((_, v), n) => (v, n) }, cs)
+    }
+    val cost = nearest(centroids).zip(t.counts).map { case ((_, d), n) => d * n }.sum
+    KModesModel(cols, centroids, cost.toDouble, iter)
+  }
+
+  /** The distributed Lloyd loop over the cached string-cast frame — the
+    * over-gate path and the parity reference. */
+  private def fitDistributed(data: DataFrame, cols: Seq[String], k: Int,
+      maxIter: Int): KModesModel = {
+    val (centroids, iter) = lloyd(caoInit(data, cols, k), maxIter) { cs =>
+      // per-(cluster, column) value counts in ONE tall aggregation
+      val tall = assign(data, cols, cs)
+        .select(col("cluster") +: cols.map(col): _*)
+        .unpivot(Array(col("cluster")), cols.map(col).toArray, "var", "value")
+        .groupBy("cluster", "var", "value").agg(count(lit(1)).as("n"))
+        .collect()
+      modes(tall.groupBy(r => (r.getInt(0), cols.indexOf(r.getString(1))))
+        .view.mapValues(_.map(r => (r.getString(2), r.getLong(3))).toSeq).toMap, cs)
+    }
+    val cost = assign(data, cols, centroids).agg(sum("__mind")).head().getLong(0)
+    KModesModel(cols, centroids, cost.toDouble, iter)
   }
 }

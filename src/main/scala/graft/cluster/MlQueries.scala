@@ -417,9 +417,8 @@ object MlQueries {
     * the exact-replay parameterization: seeded Lloyd on order cents, mod-10
     * id split, exact-integer contingency → ARI closed form — the whole
     * operator replays in DuckDB ([[LloydOracleSql.consistency]]). The MLlib
-    * KMeans + Murmur3-bucket variants (ModelMetrics.modelConsistency /
-    * labelConsistency) remain the general API, exercised by
-    * SegmentationPipeline and PipelineSpec. */
+    * KMeans + Murmur3-bucket variant (ModelMetrics.consistency) remains
+    * the general API, exercised by SegmentationPipeline and PipelineSpec. */
   private val m18Init = Seq(3000000L, 15000000L, 40000000L)
 
   private val m18 = Q(

@@ -52,6 +52,22 @@ object Par {
   }
 }
 
+/** Spark's string ordering: unsigned UTF-8 bytes (UTF8String, and DuckDB's
+  * binary-collation VARCHAR), which Java's UTF-16 `compareTo` diverges from
+  * outside the BMP. Driver-side twins of an orderBy use it to tie-break
+  * exactly as the distributed plan does. */
+object Utf8Order extends Ordering[String] {
+  def compare(a: String, b: String): Int = {
+    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
+    var i = 0
+    val n = math.min(x.length, y.length)
+    var res = 0
+    while (i < n && res == 0) {
+      res = (x(i) & 0xff) - (y(i) & 0xff); i += 1 }
+    if (res != 0) res else x.length - y.length
+  }
+}
+
 /** Loaders for the driver-generated TPC-H-ish tables (TESTDATA.md). */
 object Tables {
   val names: Seq[String] = Seq(

@@ -222,11 +222,14 @@ object ClusterQuality {
 
   /** Adjusted Rand index (M17) between two label columns: distributed
     * contingency groupBy, closed-form pair counting on the driver. */
-  def adjustedRand(df: DataFrame, labelA: String, labelB: String): Double = {
-    val cont = df.groupBy(col(labelA).cast("string").as("a"),
+  def adjustedRand(df: DataFrame, labelA: String, labelB: String): Double =
+    adjustedRandOf(df.groupBy(col(labelA).cast("string").as("a"),
         col(labelB).cast("string").as("b"))
       .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
+
+  /** ARI from the contingency cells (label a, label b, rows). */
+  private[metrics] def adjustedRandOf(cont: Seq[(String, String, Long)]): Double = {
     val as = cont.map(_._1).distinct.sorted
     val bs = cont.map(_._2).distinct.sorted
     val m = Array.ofDim[Long](as.length, bs.length)

@@ -4,6 +4,7 @@ import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.evaluation.{ClusteringEvaluator, MulticlassClassificationEvaluator}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.PatternTable
 
 /** Model-level metrics (SURVEY.md M13, M16, M18/M19, M25, M26;
   * reference metrics.py). Each reduces distributed passes to small driver
@@ -34,19 +35,35 @@ object ModelMetrics {
       "silhouette_ratio" -> (if (randMean == 0) 0.0 else real / randMean))
   }
 
-  /** M18/M19: consistency check — deterministic 90/10 split by key-hash
-    * (stable across runs, unlike randomSplit), refit on the 90%, ARI of the
-    * refit labels vs the original on the common rows (metrics.py:234-308). */
-  def modelConsistency(df: DataFrame, idCol: String, featuresCol: String,
-      k: Int, seed: Long): Double = {
+  /** M18+M19: consistency check — deterministic 90/10 split by key-hash
+    * (stable across runs, unlike randomSplit), ONE refit on the 90%, and the
+    * ARI of the refit labels vs the original: over every row (M18, model
+    * consistency) and over the training rows only (M19, label consistency —
+    * the reference's StratifiedShuffleSplit train-side comparison,
+    * metrics.py:234-308). Both ARIs come from one contingency pass. */
+  def consistency(df: DataFrame, idCol: String, featuresCol: String,
+      k: Int, seed: Long): (Double, Double) = {
     val withBucket = df.withColumn("__b", pmod(hash(col(idCol)), lit(10)))
-    val train = withBucket.filter(col("__b") =!= 0)
-    val refit = new org.apache.spark.ml.clustering.KMeans().setK(k).setSeed(seed)
+    val cells = new org.apache.spark.ml.clustering.KMeans().setK(k).setSeed(seed)
       .setFeaturesCol(featuresCol).setPredictionCol("cluster2")
-      .fit(train)
-    val relabeled = refit.transform(withBucket.drop("cluster2"))
-    ClusterQuality.adjustedRand(relabeled, "cluster", "cluster2")
+      .fit(withBucket.filter(col("__b") =!= 0))
+      .transform(withBucket.drop("cluster2"))
+      .groupBy(col("cluster").cast("string").as("a"),
+        col("cluster2").cast("string").as("b"), (col("__b") =!= 0).as("train"))
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getBoolean(2), r.getLong(3)))
+    (ClusterQuality.adjustedRandOf(cells.groupMapReduce(c => (c._1, c._2))(_._4)(_ + _)
+        .map { case ((a, b), n) => (a, b, n) }.toSeq),
+      ClusterQuality.adjustedRandOf(cells.filter(_._3).map(c => (c._1, c._2, c._4)).toSeq))
   }
+
+  /** M18 alone: [[consistency]]'s model ARI. */
+  def modelConsistency(df: DataFrame, idCol: String, featuresCol: String,
+      k: Int, seed: Long): Double = consistency(df, idCol, featuresCol, k, seed)._1
+
+  /** M19 alone: [[consistency]]'s label ARI. */
+  def labelConsistency(df: DataFrame, idCol: String, featuresCol: String,
+      k: Int, seed: Long): Double = consistency(df, idCol, featuresCol, k, seed)._2
 
   /** M18+M19 at the exact-replay parameterization ([[graft.cluster.KMeansLloyd]]
     * on integer units, mod-10 id split instead of the Murmur3 hash bucket —
@@ -76,19 +93,6 @@ object ModelMetrics {
       graft.stats.ContingencyMath.adjustedRandIndex(m)
     }
     (ari(joined), ari(joined.filter(col("id") % 10 =!= 0)))
-  }
-
-  /** M19: label consistency — refit on a deterministic 90% split and score
-    * ARI between refit labels and the ORIGINAL labels on the training rows
-    * only (the reference's StratifiedShuffleSplit train-side comparison,
-    * metrics.py:273-308; M18 scores the full frame instead). */
-  def labelConsistency(df: DataFrame, idCol: String, featuresCol: String,
-      k: Int, seed: Long): Double = {
-    val withBucket = df.withColumn("__b", pmod(hash(col(idCol)), lit(10)))
-    val train = withBucket.filter(col("__b") =!= 0)
-    val refit = new org.apache.spark.ml.clustering.KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol(featuresCol).setPredictionCol("cluster2").fit(train)
-    ClusterQuality.adjustedRand(refit.transform(train), "cluster", "cluster2")
   }
 
   /** M25: RandomForest signal loss — train RF to predict the cluster from
@@ -310,46 +314,90 @@ object ModelMetrics {
 
   /** M26: χ²-signal slicer (metrics.py:407-514) — iteratively keep filtering
     * rows by (variable == its current mode) while retention stays above a
-    * decaying floor; returns the surviving filters and final retention. */
+    * decaying floor; returns the surviving filters and final retention. A
+    * null answer never matches a filter, so it is never a mode.
+    *
+    * Every step reads the rows only through their patterns over
+    * `variables`, so the slicer collects ONE pattern table through
+    * [[graft.PatternTable]]'s measured-size gate and runs the greedy loop on
+    * the driver over (pattern, count) — integer counts, so the result
+    * equals the distributed loop's exactly. Past the gate, each iteration
+    * is one distributed tall aggregation. */
   def chiSqSlicer(df: DataFrame, variables: Seq[String],
       startFloor: Double = 0.25, floorDecay: Double = 0.01,
-      minVars: Int = 6): (Seq[(String, String)], Double) = {
-    val total = df.count().toDouble
-    var current = df
+      minVars: Int = 6): (Seq[(String, String)], Double) =
+    chiSqSlicerGated(df, variables, startFloor, floorDecay, minVars,
+      PatternTable.DefaultMaxPatterns)
+
+  /** [[chiSqSlicer]] with an explicit pattern-table gate (specs force it
+    * shut to pin the fast path against the distributed loop). */
+  private[graft] def chiSqSlicerGated(df: DataFrame, variables: Seq[String],
+      startFloor: Double, floorDecay: Double, minVars: Int,
+      maxPatterns: Int): (Seq[(String, String)], Double) =
+    PatternTable.collect(df, variables, maxPatterns) match {
+      case Some(t) =>
+        var current: Seq[Int] = t.patterns.indices // the surviving patterns
+        greedySlice(variables, startFloor, floorDecay, minVars, t.n.toDouble,
+          remaining => remaining.flatMap { v =>
+            val j = variables.indexOf(v)
+            val counts = current.groupMapReduce(t.patterns(_)(j))(t.counts(_))(_ + _)
+              .filter(_._1 != null)
+            if (counts.isEmpty) None else Some(v -> PatternTable.mode(counts))
+          }.toMap,
+          (v, mode) => {
+            val j = variables.indexOf(v)
+            current = current.filter(t.patterns(_)(j) == mode)
+          },
+          () => current.map(t.counts(_)).sum)
+      case None =>
+        var current = df
+        greedySlice(variables, startFloor, floorDecay, minVars, df.count().toDouble,
+          // ONE tall agg per iteration: it yields every remaining variable's
+          // mode AND the mode's row count (= rows kept by that candidate
+          // filter), so the iteration is a single Spark job regardless of
+          // |variables|
+          remaining => current
+            .select(remaining.map(c => col(c).cast("string").as(c)): _*)
+            .unpivot(Array.empty[org.apache.spark.sql.Column],
+              remaining.map(col).toArray, "var", "value")
+            .filter(col("value").isNotNull)
+            .groupBy("var", "value").agg(count(lit(1)).as("n")).collect()
+            .groupBy(_.getString(0)).map { case (v, rs) =>
+              v -> PatternTable.mode(rs.map(r => (r.getString(1), r.getLong(2))))
+            },
+          (v, mode) => current = current.filter(col(v).cast("string") === mode),
+          () => current.count())
+    }
+
+  /** The slicer's greedy loop over an abstract row set: `modes(vars)` maps
+    * each variable with a non-null answer among the current rows to its
+    * (mode, rows with it), `narrow(v, mode)` keeps only the rows answering
+    * `mode` to `v`, and `rows()` counts the current rows. */
+  private def greedySlice(variables: Seq[String], startFloor: Double,
+      floorDecay: Double, minVars: Int, total: Double,
+      modes: Seq[String] => Map[String, (String, Long)],
+      narrow: (String, String) => Unit,
+      rows: () => Long): (Seq[(String, String)], Double) = {
     var kept = Seq.empty[(String, String)]
     var floor = startFloor
     var remaining = variables
     var continue = true
     while (continue && remaining.nonEmpty) {
-      // ONE tall agg per iteration: it yields every remaining variable's
-      // mode AND the mode's row count (= rows kept by that candidate
-      // filter), so no per-variable count jobs are needed — the iteration
-      // is a single Spark job regardless of |variables|
-      val tall = current
-        .select(remaining.map(c => col(c).cast("string").as(c)): _*)
-        .unpivot(Array.empty[org.apache.spark.sql.Column],
-          remaining.map(col).toArray, "var", "value")
-        .groupBy("var", "value").agg(count(lit(1)).as("n")).collect()
-      val modes = tall.groupBy(_.getString(0)).map { case (v, rs) =>
-        val best = rs.maxBy(r => (r.getLong(2), r.getString(1)))(
-          Ordering.Tuple2(Ordering.Long, Ordering.String.reverse))
-        v -> (best.getString(1), best.getLong(2))
-      }
+      val m = modes(remaining)
       // the candidate keeping the most rows (greedy, deterministic tie-break)
-      val scored = remaining.map { v =>
-        val (mode, n) = modes(v)
-        (v, mode, n)
-      }.sortBy(t => (-t._3, t._1))
-      val (v, mode, n) = scored.head
-      if (n / total >= floor || kept.size < minVars) {
-        current = current.filter(col(v).cast("string") === mode)
-        kept :+= (v -> mode)
-        remaining = remaining.filterNot(_ == v)
-        floor = math.max(0.15, floor - floorDecay)
-        continue = n > 0
-      } else continue = false
+      val scored = remaining.flatMap(v => m.get(v).map { case (mode, n) =>
+        (v, mode, n) }).sortBy(t => (-t._3, t._1))
+      scored.headOption match {
+        case Some((v, mode, n)) if n / total >= floor || kept.size < minVars =>
+          narrow(v, mode)
+          kept :+= (v -> mode)
+          remaining = remaining.filterNot(_ == v)
+          floor = math.max(0.15, floor - floorDecay)
+          continue = n > 0
+        case _ => continue = false
+      }
     }
-    (kept, current.count() / total)
+    (kept, rows() / total)
   }
 
   /** M31: social presence — share of rows per cluster whose multi-choice

@@ -63,16 +63,18 @@ object DawidSkene {
     // integral ops the distributed plan runs in decimal(38,0)), and the
     // consensus attaches back by one broadcast join. The gate MEASURES the
     // tuple count (free-text rater labels could make it data-sized); past
-    // it, the original per-sweep loop below runs unchanged.
-    val combos = wide
-      .groupBy(raterCols.map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-      .limit(maxCombos + 1).collect()
-    if (combos.length <= maxCombos)
-      fitFromCombos(wide, itemCol, raterCols, classes, iters,
-        combos.map(row => raterCols.indices.map(row.getString).toVector ->
-          row.getLong(raterCols.length)))
-    else fitDistributed(wide, itemCol, raterCols, classes, iters)
+    // it, the original per-sweep loop below runs unchanged. Labels are read
+    // as strings, so null and non-string rater labels take the fast path
+    // with the distributed path's semantics.
+    graft.DriverGate.collect(wide
+        .groupBy(raterCols.map(c => col(c).cast("string").as(c)): _*)
+        .agg(count(lit(1)).as("__cnt")), maxCombos) match {
+      case Some(combos) =>
+        fitFromCombos(wide, itemCol, raterCols, classes, iters,
+          combos.map(row => raterCols.indices.map(row.getString).toVector ->
+            row.getLong(raterCols.length)))
+      case None => fitDistributed(wide, itemCol, raterCols, classes, iters)
+    }
   }
 
   /** Driver-side EM over (rater-label tuple, count) rows — bit-exact
@@ -139,21 +141,12 @@ object DawidSkene {
     }
     // consensus per tuple: argmax by (posterior desc, class asc in UTF-8
     // byte order — the distributed row_number's string ordering)
-    val utf8Order: Ordering[String] = (a: String, b: String) => {
-      val ab = a.getBytes("UTF-8"); val bb = b.getBytes("UTF-8")
-      var i = 0
-      val n = math.min(ab.length, bb.length)
-      var res = 0
-      while (i < n && res == 0) {
-        res = (ab(i) & 0xff) - (bb(i) & 0xff); i += 1 }
-      if (res != 0) res else ab.length - bb.length
-    }
     val consensus = combos.indices.flatMap { i =>
       val post = t(i)
       if (post.isEmpty) None
       else {
         val (c, tv) = post.toSeq.minBy { case (cc, tvv) => (-tvv, cc) }(
-          Ordering.Tuple2(Ordering.BigInt, utf8Order))
+          Ordering.Tuple2(Ordering.BigInt, graft.Utf8Order))
         Some((combos(i)._1, c, tv.toLong))
       }
     }
@@ -169,7 +162,7 @@ object DawidSkene {
       spark.sparkContext.parallelize(consensus.map { case (ys, c, tv) =>
         org.apache.spark.sql.Row.fromSeq(ys ++ Seq(c, tv)) }, 1), schema)
     val cond = raterCols.zipWithIndex.map { case (rc, j) =>
-      wide(rc) === comboDf(s"__y$j") }.reduce(_ && _)
+      wide(rc).cast("string") === comboDf(s"__y$j") }.reduce(_ && _)
     wide.join(broadcast(comboDf), cond)
       .select(col(itemCol), col("label"), col("conf_micro"))
   }

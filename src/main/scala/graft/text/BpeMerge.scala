@@ -112,23 +112,10 @@ object BpeMerge {
       .select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .withColumn("syms", split(col("w"), ""))
-    val collected = words0.limit(maxVocab + 1).collect()
-    if (collected.length <= maxVocab) {
+    val collected = graft.DriverGate.collect(words0, maxVocab).orNull
+    if (collected != null) {
       var vocab: Array[(String, Long, Array[String])] = collected.map(r =>
         (r.getString(0), r.getLong(1), r.getSeq[String](2).toArray))
-      // UTF-8 byte comparison = UTF8String binary ordering = what the
-      // distributed orderBy(cnt desc, x, y) compares
-      def byteLt(a: String, b: String): Boolean = {
-        val ab = a.getBytes("UTF-8"); val bb = b.getBytes("UTF-8")
-        val n = math.min(ab.length, bb.length)
-        var i = 0
-        while (i < n) {
-          val d = (ab(i) & 0xff) - (bb(i) & 0xff)
-          if (d != 0) return d < 0
-          i += 1
-        }
-        ab.length < bb.length
-      }
       val merges = scala.collection.mutable.ArrayBuffer
         .empty[(Long, String, String, Long)]
       var rank = 1
@@ -146,8 +133,8 @@ object BpeMerge {
         else {
           val ((x, y), c) = cnt.reduceLeft { (a, b) =>
             if (b._2 > a._2 ||
-                (b._2 == a._2 && (byteLt(b._1._1, a._1._1) ||
-                  (b._1._1 == a._1._1 && byteLt(b._1._2, a._1._2))))) b
+                (b._2 == a._2 && (graft.Utf8Order.lt(b._1._1, a._1._1) ||
+                  (b._1._1 == a._1._1 && graft.Utf8Order.lt(b._1._2, a._1._2))))) b
             else a
           }
           merges += ((rank.toLong, x, y, c))

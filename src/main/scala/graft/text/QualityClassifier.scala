@@ -61,15 +61,14 @@ object QualityClassifier {
     val d = featureCols.size
     val feats0 = docs.select(
       (label.cast("double").as("y") +: featureCols.map(col)): _*)
-    // one data pass: distinct (y, x) combos with counts; collect bounded
-    // by maxCombos + 1 so the overflow case is detected, never guessed
-    val comboRows = feats0
+    // one data pass: distinct (y, x) combos with counts, collected through
+    // the measured-size gate (null past its row or byte bound)
+    val comboRows = graft.DriverGate.collect(feats0
       .groupBy(col("y") +: featureCols.map(col): _*)
       .agg(count(lit(1)).as("__cnt"))
       .select((col("y") +: featureCols.map(c => col(c).cast("double"))) :+
-        col("__cnt"): _*)
-      .limit(maxCombos + 1).collect()
-    if (comboRows.length <= maxCombos) {
+        col("__cnt"): _*), maxCombos).orNull
+    if (comboRows != null) {
       val y = comboRows.map(_.getDouble(0))
       val xs = comboRows.map(r => Array.tabulate(d)(j => r.getDouble(j + 1)))
       val cnt = comboRows.map(_.getLong(d + 1))

@@ -89,21 +89,6 @@ object UnigramLm {
         pieces.map(p => p.piece -> p.scoreMicro))
   }
 
-  /** Unsigned UTF-8 byte comparison — Spark's UTF8String / DuckDB's
-    * binary-collation VARCHAR ordering, which Java's UTF-16
-    * `compareTo` diverges from outside the BMP. */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
   /** score_micro = floor(ln((cnt+1)/(T+N))·1e6) with T = Σ kept
     * counts, N = kept pieces — add-one smoothing, micro-nat longs.
     * Driver-local twin of the former crossJoin(broadcast(totals))
@@ -128,7 +113,7 @@ object UnigramLm {
       p => p._1.codePointCount(0, p._1.length) == 1)
     val multi = multiAll.filter(_._2 >= 1L)
       .sortWith((x, y) =>
-        x._2 > y._2 || (x._2 == y._2 && utf8Less(x._1, y._1)))
+        x._2 > y._2 || (x._2 == y._2 && graft.Utf8Order.lt(x._1, y._1)))
       .take(vocabExtra)
     scoreLocal(chars ++ multi)
   }

@@ -89,4 +89,23 @@ class DawidSkeneSpec extends SparkSpecBase {
       dump(DawidSkene.fitGated(wide, "item", Seq("r1", "r2", "r3"),
         classes3, iters = 5, maxCombos = 0)))
   }
+
+  test("combo fast path accepts null and non-string rater labels like the distributed loop") {
+    // integer labels (classes "1"/"2" after the string cast) and null
+    // votes: the fast path reads labels as strings, so both gate paths
+    // accept the frame; items with a null vote drop out of the E-step the
+    // same way on both
+    val rows = Seq[(Long, Integer, Integer, Integer)](
+      (1L, 1, 1, 2), (2L, 2, 2, 1), (3L, 1, null, 1), (4L, 2, 1, 2),
+      (5L, 1, 1, 2), (6L, null, null, null), (7L, 2, 2, 2), (8L, 1, 2, 1),
+      (9L, 2, null, 2), (10L, 1, 1, 1))
+    val wide = rows.toDF("item", "r1", "r2", "r3")
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("item").collect().map(_.toSeq).toSeq
+    val fast = dump(DawidSkene.fit(wide, "item", Seq("r1", "r2", "r3"),
+      Seq("1", "2")))
+    assert(fast.nonEmpty)
+    assert(fast === dump(DawidSkene.fitGated(wide, "item",
+      Seq("r1", "r2", "r3"), Seq("1", "2"), iters = 5, maxCombos = 0)))
+  }
 }
